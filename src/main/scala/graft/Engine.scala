@@ -6,15 +6,27 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * The reference (euiko/duckdb-pgwire, src/duckdb_pgwire_extension.cpp:40)
   * holds one process-wide engine instance shared by every connection; the
-  * Spark-native equivalent is one [[SparkSession]] whose catalog (temp
-  * views + registered functions) is shared, with `newSession()` clones
-  * for per-connection state.
+  * Spark-native equivalent is one root [[SparkSession]], configured here
+  * and nowhere else, with the functions and (via [[Tables.registerAll]])
+  * the base tables registered on it once. The pgwire server does not
+  * mutate the root after `start()`; each connection gets one clone of
+  * it, which carries the root's temp views, functions and conf and keeps
+  * its own temp state private.
   *
   * Config posture (SURVEY §4): AQE on, UTC session timezone, ANSI on
   * (Spark 4.x default — matches DuckDB's strict-cast semantics),
   * shuffle partitions sized for local[32] rather than the 200 default.
   */
 object Engine {
+
+  /** Local cores for the mains that size their master (`Verify`, `Bench`,
+    * `ScaleBench`): `SPARK_GRAFT_CPUS` when set, else every available
+    * processor. Anything but a positive integer is refused. */
+  def cpus(raw: Option[String] = sys.env.get("SPARK_GRAFT_CPUS")): Int =
+    raw.map(v => v.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$v'")))
+      .getOrElse(Runtime.getRuntime.availableProcessors())
 
   /** Build (or reuse) the shared session. Idempotent. */
   def session(master: String = "local[32]"): SparkSession = {
@@ -54,6 +66,10 @@ object Engine {
       // instead (escapeBackslashesInLiterals), which preserves both
       // behaviors under the default parser.
       .config("spark.ui.enabled", "false")
+      // events.ts has shipped as parquet TIMESTAMP(NANOS), which Spark's
+      // reader rejects (PARQUET_TYPE_ILLEGAL) unless read as a long;
+      // Tables.read normalizes the long back to a timestamp
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // managed-table location for the in-memory catalog: keep it out
       // of the repo and unique per JVM (a stale spark-warehouse dir
       // otherwise breaks CREATE TABLE across restarts)
@@ -1400,50 +1416,45 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** per-(session, dir, table) DataFrame cache: every corpus query
-    * calls load(), and an uncached load costs a file listing + parquet
-    * footer schema read — ~50-100 ms of pure driver latency that
-    * dominated the per-query floor at small SF. The cached object is
-    * just the analyzed read plan; execution still streams from disk.
-    */
-  private val loadCache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    loadCache.computeIfAbsent((spark, dir, name), _ => {
-      // events.ts has shipped as parquet TIMESTAMP(NANOS) — which
-      // Spark's reader rejects (PARQUET_TYPE_ILLEGAL) unless read as a
-      // long — in some data drops and TIMESTAMP(MICROS) in others, so
-      // normalize from whatever the footer says to a session-TZ
-      // TimestampType column. Nanos convert with integer arithmetic (a
-      // double division would lose precision above 2^53 ns).
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      if (name == "events") {
-        import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-        df.schema("ts").dataType match {
-          case LongType => // nanos-as-long drop
-            df.withColumn("ts", org.apache.spark.sql.functions.expr(
-              "timestamp_micros(ts div 1000)"))
-          case TimestampNTZType => // micros drop (naive, session TZ is UTC)
-            df.withColumn("ts",
-              df("ts").cast(org.apache.spark.sql.types.TimestampType))
-          case _ => df
-        }
-      } else df
-    })
+  /** One base table: its temp view, registered on first use. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    registerAll(spark, dir)
+    spark.table(name)
+  }
 
   /** Register every table as a temp view in the session catalog —
     * the Spark analogue of the reference's shared catalog
-    * (src/duckdb_pgwire_extension.cpp:40). Idempotent AND cached per
-    * (session, dir): re-registration costs 10 parquet footer reads,
-    * which dominated the SQL-path queries' latency.
+    * (src/duckdb_pgwire_extension.cpp:40) and the only code that reads
+    * a base table. Idempotent per (session, dir): the marker lives in
+    * the session conf, so a clone of a registered session (one per
+    * pgwire connection) inherits views and marker and reads no footer.
     */
   def registerAll(spark: SparkSession, dir: String): Unit = {
     val marker = "graft.tables.dir"
     if (!spark.conf.getOption(marker).contains(dir)) {
-      names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
+      names.foreach(n => read(spark, dir, n).createOrReplaceTempView(n))
       spark.conf.set(marker, dir)
     }
+  }
+
+  /** events.ts has shipped as TIMESTAMP(NANOS) in some data drops and
+    * TIMESTAMP(MICROS) in others, so normalize from whatever the footer
+    * says to a session-TZ TimestampType column. Nanos convert with
+    * integer arithmetic (a double division would lose precision above
+    * 2^53 ns). */
+  private def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val df = spark.read.parquet(s"$dir/$name.parquet")
+    if (name == "events") {
+      import org.apache.spark.sql.types.{LongType, TimestampNTZType}
+      df.schema("ts").dataType match {
+        case LongType => // nanos-as-long drop
+          df.withColumn("ts", org.apache.spark.sql.functions.expr(
+            "timestamp_micros(ts div 1000)"))
+        case TimestampNTZType => // micros drop (naive, session TZ is UTC)
+          df.withColumn("ts",
+            df("ts").cast(org.apache.spark.sql.types.TimestampType))
+        case _ => df
+      }
+    } else df
   }
 }

@@ -23,12 +23,10 @@ object ScaleBench {
     val sfDir = args(0)
     val out = args(1)
     val names = args.drop(2).toSeq
-    // honor SPARK_GRAFT_CPUS like Bench does (r13): the core-scaling
-    // probe runs the heavy queries at 8 vs 32 cores on sf10+, where
-    // (unlike sf0.1) the work is large enough for core count to show
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    // the core-scaling probe runs the heavy queries at 8 vs 32 cores on
+    // sf10+, where (unlike sf0.1) the work is large enough to show
+    val cpus = Engine.cpus()
     val spark = Engine.session(s"local[$cpus]")
-    spark.sparkContext.setLogLevel("WARN")
 
     val la0 = loadavg()
     def pass(): Seq[(String, Double)] = names.map { name =>

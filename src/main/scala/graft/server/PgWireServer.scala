@@ -7,6 +7,7 @@ import java.util.concurrent.atomic.AtomicBoolean
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.ColumnBridge
 
 import graft.Engine
 import PgWire._
@@ -21,8 +22,14 @@ import PgWire._
   *    `sslmode=disable` in client/go/cmd/simple/main.go:12)
   *  - one handler per connection against a shared catalog
   *    (`DatabaseInstance &db`, cpp:40 → here one root SparkSession,
-  *    with `newSession()` clones so temp state is per-connection — a
-  *    strict superset of the reference's per-query amnesia, cpp:42)
+  *    prepared once by [[graft.Engine.session]] and
+  *    [[graft.Tables.registerAll]] and not mutated after `start()`).
+  *    Each connection gets one clone of the root: it inherits the
+  *    root's temp views, functions and conf, so opening it reads no
+  *    parquet footer, and its own temp state stays private — a strict
+  *    superset of the reference's per-query amnesia, cpp:42.
+  *    `onNewSession` runs on each clone before the connection's first
+  *    message.
   *  - simple AND extended query protocol (Parse/Bind/Describe/
   *    Execute/Sync) with REAL bind parameters — `$N` placeholders,
   *    text + fixed-width binary formats ([[BindParams]]) — where the
@@ -69,7 +76,11 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
         t.setDaemon(true)
         t.start()
       }
-    } catch { case NonFatal(_) => /* socket closed */ }
+    } catch {
+      case NonFatal(e) if !serverSocket.isClosed =>
+        System.err.println(s"[pgwire] accept loop stopped: $e")
+      case NonFatal(_) => // closed by stop()
+    }
   }
 
   // ---------------------------------------------------------------- session
@@ -83,10 +94,8 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     val secret = secretRng.nextInt()
     try {
       if (!startup(in, out, w, pid, secret)) return
-      // per-connection session: shared catalog, private temp views/conf
-      val session = root.newSession()
-      graft.Functions.registerAll(session)
-      onNewSession(session) // e.g. temp-view catalog registration
+      val session = ColumnBridge.cloneSession(root)
+      onNewSession(session)
       // all of this connection's Spark jobs run on this thread → one
       // job group; a CancelRequest with the matching key cancels it
       val group = s"pgwire-$pid"
@@ -108,7 +117,8 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
         }
       }
     } catch {
-      case NonFatal(_) => // connection torn down
+      case NonFatal(e) =>
+        System.err.println(s"[pgwire] connection $pid failed: $e")
     } finally {
       cancelKeys.remove((pid, secret))
       try sock.close() catch { case NonFatal(_) => }
@@ -121,6 +131,10 @@ final class PgWireServer(root: SparkSession, port: Int = 15432,
     */
   private def startup(in: DataInputStream, out: DataOutputStream,
       w: MessageWriter, pid: Int, secret: Int): Boolean = {
+    // a port probe connects and closes without sending a byte: clean EOF
+    in.mark(1)
+    if (in.read() < 0) return false
+    in.reset()
     var len = in.readInt()
     var code = in.readInt()
     while (code == SslRequestCode || code == GssRequestCode) {
@@ -663,18 +677,6 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
         "COPY syntax: COPY (query)|table TO 'path' (FORMAT PARQUET|CSV|JSON [, HEADER]) | COPY table FROM 'path' (...) | COPY table FROM STDIN [(FORMAT csv [, HEADER])]")
   }
 
-  /** Append `df` to catalog table `table`; returns the row count.
-    * Generated columns recompute and NOT NULL / CHECK enforce first,
-    * same as the file-path COPY. */
-  private def loadInto(table: String, df: DataFrame): Long = {
-    val snap = graft.TableConstraints.completeForWrite(session, table, df)
-      .localCheckpoint() // count + write from one materialization
-    graft.TableConstraints.enforce(table, snap)
-    val n = snap.count()
-    snap.write.mode("append").insertInto(table)
-    n
-  }
-
   /** CopyDone: parse the buffered copy-in payload (pg text format:
     * tab-delimited `\N` nulls; or CSV) against the target table's
     * schema via Spark's CSV reader over an in-memory Dataset, append,
@@ -699,7 +701,7 @@ private final class ConnectionHandler(session: SparkSession, w: MessageWriter) {
         if (st.csv) reader.option("header", st.header.toString).csv(ds)
         else reader // pg text format: no quoting, backslash escapes, \N null
           .option("quote", "\u0000").option("nullValue", "\\N").csv(ds)
-      w.cstr(s"COPY ${loadInto(st.table, df)}").send('C')
+      w.cstr(s"COPY ${CopyOps.loadInto(session, st.table, df)}").send('C')
     } catch { case NonFatal(e) => errorResponse(e) }
     readyForQuery()
   }

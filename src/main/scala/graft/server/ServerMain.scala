@@ -17,8 +17,7 @@ object ServerMain {
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
     val spark = Engine.session()
     Tables.registerAll(spark, sfDir)
-    // temp views are per-session; re-register on each connection clone
-    val server = new PgWireServer(spark, port, Tables.registerAll(_, sfDir))
+    val server = new PgWireServer(spark, port)
     val actualPort = server.start()
     println(s"graft pgwire server listening on :$actualPort (sfDir=$sfDir)")
     Thread.currentThread.join() // serve until killed

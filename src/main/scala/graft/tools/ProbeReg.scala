@@ -1,7 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-import graft.GraftExtensions
+import graft.Engine
 
 /** Dev tool: given a newline list of function names on stdin, print which
   * resolve in the engine session (Spark native, graft alias, or macro) and
@@ -9,15 +8,8 @@ import graft.GraftExtensions
   */
 object ProbeReg {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Engine.session("local[4]")
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Functions.registerAll(spark)
     val src = scala.io.Source.fromFile(args(0))
     val out = new java.io.PrintWriter(args(1))
     for (n <- src.getLines().map(_.trim).filter(_.nonEmpty)) {

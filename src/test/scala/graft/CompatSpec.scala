@@ -247,7 +247,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("SUMMARIZE statement: per-column stats in one pass") {
-    Tables.registerAll(spark, sfDir)
     val got = Engine.query(spark, "SUMMARIZE region").collect()
     assert(got.length == 2) // r_regionkey, r_name
     val byName = got.map(r => r.getString(0) -> r).toMap
@@ -266,7 +265,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("USING SAMPLE rewrites to TABLESAMPLE (percent and rows)") {
-    Tables.registerAll(spark, sfDir)
     // 100% sample must be the whole table (sampling RNG can't shrink it)
     val all = Engine.query(spark,
       "SELECT count(*) AS n FROM (SELECT * FROM nation USING SAMPLE 100%)")
@@ -287,7 +285,6 @@ class CompatSpec extends SparkSpecBase {
   test("DISTINCT ON falls back untouched inside subqueries (loud failure)") {
     // top-level works (oracle q_distinct_on); a subquery DISTINCT ON
     // must raise an analysis error, not silently produce wrong rows
-    Tables.registerAll(spark, sfDir)
     val thrown = intercept[Exception] {
       Engine.query(spark,
         """SELECT * FROM (SELECT DISTINCT ON (n_regionkey) n_regionkey,
@@ -333,7 +330,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("PRAGMA version / show_tables / table_info / database_list / CALL") {
-    Tables.registerAll(spark, sfDir)
     val v = Engine.query(spark, "PRAGMA version").collect().head
     assert(v.getString(0).contains("v1.1.1"), v.toString)
     val tables = Engine.query(spark, "PRAGMA show_tables")
@@ -358,7 +354,6 @@ class CompatSpec extends SparkSpecBase {
       "SELECT add1(5) AS x, add1(2, 3) AS y, add1(2, b := 7) AS z").collect().head
     assert((r.getInt(0), r.getInt(1), r.getInt(2)) == ((16, 6, 10)), r.toString)
     // TABLE macro in FROM position
-    Tables.registerAll(spark, sfDir)
     Engine.query(spark,
       "CREATE MACRO topn(n) AS TABLE SELECT n_name FROM nation ORDER BY n_nationkey LIMIT n")
     val names = Engine.query(spark, "SELECT * FROM topn(3)").collect()
@@ -384,7 +379,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("dynamic PIVOT / UNPIVOT statements discover values") {
-    Tables.registerAll(spark, sfDir)
     // dynamic PIVOT: values of o_orderstatus discovered, not listed
     val piv = Engine.query(spark,
       "PIVOT (SELECT o_orderpriority AS priority, o_orderstatus AS st FROM orders) " +
@@ -412,7 +406,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("duckdb_* metadata TVFs snapshot the session catalog") {
-    Tables.registerAll(spark, sfDir)
     val tables = Engine.query(spark,
       "SELECT table_name, column_count FROM duckdb_tables() " +
         "WHERE table_name = 'nation'").collect()
@@ -444,7 +437,6 @@ class CompatSpec extends SparkSpecBase {
   }
 
   test("information_schema.tables/columns lower onto the metadata TVFs") {
-    Tables.registerAll(spark, sfDir)
     val t = Engine.query(spark,
       "SELECT table_name, table_type FROM information_schema.tables " +
         "WHERE table_name = 'nation'").collect()
@@ -1331,7 +1323,6 @@ class CompatSpec extends SparkSpecBase {
 
   test("EXPLAIN [ANALYZE] statement: DuckDB two-column result shape") {
     def q(s: String) = Engine.query(spark, s)
-    Tables.registerAll(spark, sfDir)
     // plain EXPLAIN: (explain_key, explain_value), no execution
     val e1 = q("EXPLAIN SELECT n_name FROM nation WHERE n_nationkey < 3")
     assert(e1.columns.toSeq == Seq("explain_key", "explain_value"))

@@ -101,4 +101,13 @@ class ExtensionsSpec extends SparkSpecBase {
       .collect().map(r => (r.getInt(0), r.getInt(1))).toSeq
     assert(q == Seq((1, 20), (2, 5)))
   }
+
+  test("SPARK_GRAFT_CPUS: a positive integer, else every processor; anything else refused") {
+    assert(Engine.cpus(Some(" 6 ")) == 6)
+    assert(Engine.cpus(None) == Runtime.getRuntime.availableProcessors())
+    for (bad <- Seq("0", "-2", "four", "4;x", "")) {
+      val e = intercept[IllegalArgumentException](Engine.cpus(Some(bad)))
+      assert(e.getMessage.contains("SPARK_GRAFT_CPUS must be a positive integer"), e)
+    }
+  }
 }

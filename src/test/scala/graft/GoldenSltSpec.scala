@@ -52,7 +52,6 @@ class GoldenSltSpec extends SparkSpecBase {
 
   test("golden.slt corpus matches") {
     val s = spark
-    Tables.registerAll(s, sfDir)
     val text = Source.fromInputStream(
       getClass.getResourceAsStream("/golden.slt"), "UTF-8").mkString
     parse(text).foreach { c =>

@@ -16,7 +16,7 @@ import graft.server.PgWireServer
 class PgWireSpec extends SparkSpecBase {
 
   private lazy val server = {
-    val s = new PgWireServer(spark, port = 0, Tables.registerAll(_, sfDir))
+    val s = new PgWireServer(spark, port = 0)
     val port = s.start()
     (s, port)
   }
@@ -332,6 +332,31 @@ class PgWireSpec extends SparkSpecBase {
     val (_, r2, _, _) = c2.query("SELECT count(*) AS n FROM region")
     assert(r1 == r2 && r1 == Seq(Seq(Some("5"))))
     c1.close(); c2.close()
+  }
+
+  test("each connection clones the prepared root: tables shared, temp views private") {
+    // clones inherit the root's runtime state, so this root is one no
+    // other spec mutates, prepared the way ServerMain prepares its own
+    val root = spark.newSession()
+    Functions.registerAll(root)
+    Tables.registerAll(root, sfDir)
+    val s = new PgWireServer(root, 0)
+    val port = s.start()
+    try {
+      val c1 = new Client(port); c1.startup()
+      val c2 = new Client(port); c2.startup()
+      for (c <- Seq(c1, c2)) {
+        val (_, rows, _, errs) = c.query("SELECT count(*) AS n FROM region")
+        assert(errs.isEmpty, errs)
+        assert(rows == Seq(Seq(Some("5"))))
+      }
+      val (_, _, _, e1) = c1.query("CREATE TEMP VIEW clone_private AS SELECT 1 AS v")
+      assert(e1.isEmpty, e1)
+      val (_, _, _, e2) = c2.query("SELECT * FROM clone_private")
+      assert(e2.nonEmpty && e2.head._1 == "42P01", e2)
+      assert(!root.catalog.tableExists("clone_private"))
+      c1.close(); c2.close()
+    } finally s.stop()
   }
 
   test("extended protocol: Parse/Bind/Describe/Execute/Sync") {
@@ -999,6 +1024,22 @@ class PgWireSpec extends SparkSpecBase {
     val (_, _, _, e3) = c.query("SELECT 1 AS one")
     assert(e3.isEmpty, e3)
     c.query("DROP TABLE copy_stdin")
+    c.close()
+  }
+
+  test("COPY FROM STDIN rejects a duplicate PRIMARY KEY and leaves the table unchanged") {
+    val (_, port) = server
+    val c = new Client(port)
+    c.startup()
+    val (_, _, _, e0) = c.query("CREATE TABLE copy_pk (k INT PRIMARY KEY, v VARCHAR)")
+    assert(e0.isEmpty, e0)
+    val (_, _, _, e1) = c.query("INSERT INTO copy_pk VALUES (1, 'a'), (2, 'b')")
+    assert(e1.isEmpty, e1)
+    val (_, _, tags, e2) = c.copyIn("COPY copy_pk FROM STDIN (FORMAT csv)", "3,c\n2,dup\n")
+    assert(e2.nonEmpty && tags.isEmpty, (tags, e2))
+    val (_, rows, _, _) = c.query("SELECT k, v FROM copy_pk ORDER BY k")
+    assert(rows == Seq(Seq(Some("1"), Some("a")), Seq(Some("2"), Some("b"))))
+    c.query("DROP TABLE copy_pk")
     c.close()
   }
 

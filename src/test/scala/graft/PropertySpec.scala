@@ -224,7 +224,6 @@ class PropertySpec extends SparkSpecBase {
 
   test("DataFrame and SQL paths agree for arbitrary pushed filters") {
     val s = spark
-    Tables.registerAll(s, sfDir)
     val l = Tables.load(s, sfDir, "lineitem")
     val gen = for {
       q <- Gen.chooseNum(1.0, 50.0)

@@ -61,7 +61,6 @@ class SinksSpec extends SparkSpecBase {
   test("CREATE TABLE AS SELECT into the session catalog") {
     val s = spark
     spark.sql("DROP TABLE IF EXISTS ctas_check")
-    Tables.registerAll(s, sfDir)
     spark.sql("CREATE TABLE ctas_check USING parquet AS SELECT * FROM region")
     assert(spark.table("ctas_check").count() == 5)
     spark.sql("DROP TABLE ctas_check")

@@ -604,7 +604,6 @@ class Vocab9Spec extends SparkSpecBase {
       "ORDER BY x OFFSET 1 ROWS FETCH FIRST 1 ROWS ONLY")
       .collect().map(_.getInt(0)).toSeq == Seq(2))
     // TABLESAMPLE methods accept (RNG differs — sanity bound only)
-    Tables.registerAll(spark, sfDir)
     val n = Engine.query(spark,
       "SELECT count(*) AS n FROM documents TABLESAMPLE bernoulli(50%)")
       .collect().head.getLong(0)

@@ -2,7 +2,7 @@
 # Run a graft main class directly (no sbt lock): tools/run_main.sh <mainClass> [args...]
 # Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, SPARK_DRIVER_MEM, JVM_EXTRA
 MAIN="$1"; shift
-CP="/root/repo/target/scala-2.13/classes:/opt/spark/jars/*"
+CP="$(dirname "$0")/../target/scala-2.13/classes:/opt/spark/jars/*"
 ADD_OPENS=""
 for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio \
          java.util java.util.concurrent java.util.concurrent.atomic; do

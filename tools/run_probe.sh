@@ -1,13 +1,4 @@
 #!/bin/bash
-# Replay the conformance corpus through graft.tools.ProbeSql without
-# sbt (sbt adds these --add-opens automatically; a bare JVM needs them
-# or DateType rows fail to decode with EXPRESSION_DECODING_FAILED).
+# Replay the conformance corpus through graft.tools.ProbeSql without sbt.
 # Usage: tools/run_probe.sh <corpus.tsv> <out.tsv>
-exec java \
-  --add-opens=java.base/java.lang=ALL-UNNAMED \
-  --add-opens=java.base/java.lang.invoke=ALL-UNNAMED \
-  --add-opens=java.base/java.util=ALL-UNNAMED \
-  --add-opens=java.base/sun.nio.ch=ALL-UNNAMED \
-  --add-opens=java.base/sun.util.calendar=ALL-UNNAMED \
-  -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
-  -Dspark.ui.enabled=false graft.tools.ProbeSql "$@"
+exec "$(dirname "$0")/run_main.sh" graft.tools.ProbeSql "$@"
